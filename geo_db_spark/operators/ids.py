@@ -103,6 +103,11 @@ def assign_stable_ids_counted(
     them)."""
     if not order_cols:
         raise ValueError("order_cols must name at least one column")
+    if not set(drop_cols) <= set(order_cols):
+        raise ValueError(
+            "drop_cols must be order columns; not in order_cols: "
+            f"{sorted(set(drop_cols) - set(order_cols))}"
+        )
     if materialize_input:
         # lazy: the range exchange's boundary-sampling pass reads every
         # input partition and is the first job to touch this frame, so

@@ -8,8 +8,21 @@ derives a new DataFrame, and the stage ordering carries the same data
 dependencies (e.g. D7 only fills what D6 left NULL).
 
 The two row-at-a-time loops (per_city.sql, per_subdivision.sql driven by
-src/post/mod.rs:96-107) are replaced by ONE set-based job each — see
-geo_db_spark.operators.labels.
+src/post/mod.rs:96-107) are replaced by set-based passes — see
+geo_db_spark.operators.labels. The reference runs each label stage once
+for cities and again for subdivisions; here each runs ONCE per build,
+over the union of both key sets, and fills both column families:
+- ONE ancestor closure (D3), seeded with every city and every 2nd-level
+  TE, feeds D4 and both D6 consumers (through ``closure_fn``);
+- D5 is one concat per city id, joined by id and by 2nd_id;
+- D6 and D8 results depend only on the id, so one pass over the union of
+  city and subdivision ids serves both;
+- D7 results depend only on (owner, country); its target key is tagged
+  with the role (city / subdivision), because a 2nd-level TE can also
+  be a city of another country and an untagged key would duplicate
+  spine rows.
+Within each column family the stages keep the reference order, so each
+fill sees the same inputs as before the merge.
 
 Determinism: all SQLite arbitrary-winner spots carry documented
 tiebreaks (see operators/labels.py docstring and inline notes below).
@@ -34,7 +47,7 @@ the spine, and dimension-sized inputs (countries, languages) broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from geo_db_spark.operators.closure import deepest_qualifying_ancestor, transitive_closure
@@ -56,6 +69,14 @@ def _fill(df: DataFrame, updates: DataFrame, key: str, col: str, update_key: str
         df.join(u, key, "left")
         .withColumn(col, F.coalesce(F.col(col), F.col("__new")))
         .drop("__new")
+    )
+
+
+def _as_sub(df: DataFrame) -> DataFrame:
+    """Rename a city label column to its subdivision twin
+    (native_label -> 2nd_native_label, eo_label -> 2nd_eo_label)."""
+    return df.withColumnsRenamed(
+        {c: f"2nd_{c}" for c in ("native_label", "eo_label") if c in df.columns}
     )
 
 
@@ -100,15 +121,23 @@ def post_process(
     cities = cities.join(picked, "id", "left")  # country NULL when none
 
     # ---- find_subdivision.sql (D3 + D4) -----------------------------
-    # admin-hierarchy edges are bounded (~1e6 for all of WikiData): safe
-    # to pin the broadcast and make every recursion level shuffle-free
-    closure = transitive_closure(
-        edges, cities.select("id"), max_steps=max_steps, broadcast_edges=True
+    # ONE ancestor closure per build, seeded with every city AND every
+    # 2nd-level TE: D4 reads it for the cities, D6 (below) for the
+    # unlabeled cities and subdivisions, which are all among its seeds.
+    # Admin-hierarchy edges are bounded (~1e6 for all of WikiData): safe
+    # to pin the broadcast and make every recursion level shuffle-free.
+    # Multi-path DAGs duplicate (seed, id, step) rows; neither D4 nor D6
+    # needs the multiplicity.
+    second = tes.filter(F.col("is_2nd")).select("id")
+    closure = _barrier(
+        transitive_closure(
+            edges,
+            cities.select("id").unionByName(second).distinct(),
+            max_steps=max_steps,
+            broadcast_edges=True,
+        ).dropDuplicates(["seed", "id", "step"])
     )
-    deepest = deepest_qualifying_ancestor(
-        closure.dropDuplicates(["seed", "id", "step"]),
-        tes.filter(F.col("is_2nd")).select("id"),
-    )
+    deepest = deepest_qualifying_ancestor(closure, second)
     cities = _barrier(
         cities.join(
             deepest.select(F.col("seed").alias("id"), F.col("id").alias("2nd_id")),
@@ -117,82 +146,92 @@ def post_process(
         )
     )
 
-    # ---- city_labels.sql (D5) ---------------------------------------
-    # native-label concat per CITY id; also reused by subdivision_labels
-    # (the reference's labels_inner scans `cities`, so only subdivisions
-    # that are themselves cities are covered there — faithful quirk)
-    city_native = native_label_concat(cities.select("id"), object_labels).cache()
-    cities = cities.join(city_native, "id", "left")
-
-    # ---- per_city.sql loop (D6, set-based) --------------------------
-    unlabeled = cities.filter(F.col("native_label").isNull()).select("id")
-    resolved = resolve_labels_via_ancestors(
-        unlabeled, edges, object_languages, languages, object_labels,
-        out_col="native_label", max_steps=max_steps,
-    )
-    cities = _fill(cities, resolved, "id", "native_label", update_key="seed")
-
-    # ---- city_labels_by_country.sql (D7) ----------------------------
-    targets = (
-        cities.filter(F.col("native_label").isNull() & F.col("country").isNotNull())
-        .select(F.col("id").alias("target_id"), F.col("id").alias("owner"), "country")
-    )
-    by_country = labels_by_country(
-        targets, countries, object_languages, languages, object_labels,
-        out_col="native_label",
-    )
-    cities = _barrier(_fill(cities, by_country, "id", "native_label", update_key="target_id"))
-
-    # ---- esperanto_city_labels.sql (D8) -----------------------------
-    cities = cities.join(eo_label_pick(cities.select("id"), object_labels), "id", "left")
-
-    # ---- subdivision_labels.sql (D5 keyed by 2nd_id) ----------------
-    cities = cities.join(
-        city_native.select(
-            F.col("id").alias("2nd_id"), F.col("native_label").alias("2nd_native_label")
-        ),
-        "2nd_id",
-        "left",
+    # ---- city_labels.sql + subdivision_labels.sql (D5) --------------
+    # native-label concat per CITY id, joined by id and by 2nd_id (the
+    # reference's labels_inner scans `cities`, so only subdivisions that
+    # are themselves cities are covered by the 2nd_id join — faithful
+    # quirk)
+    city_native = _barrier(native_label_concat(cities.select("id"), object_labels))
+    cities = cities.join(city_native, "id", "left").join(
+        _as_sub(city_native.withColumnRenamed("id", "2nd_id")), "2nd_id", "left"
     )
 
-    # ---- per_subdivision.sql loop (D6 on distinct subdivisions) -----
-    sub_unlabeled = (
-        cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull())
-        .select(F.col("2nd_id").alias("id"))
+    # ---- per_city.sql + per_subdivision.sql loops (D6, one pass) ----
+    # a D6 result depends only on the seed id, so the unlabeled cities
+    # and the unlabeled subdivisions resolve in ONE set-based pass over
+    # the union of their ids, reading the shared closure
+    unlabeled = (
+        cities.filter(F.col("native_label").isNull())
+        .select("id")
+        .unionByName(
+            cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull())
+            .select(F.col("2nd_id").alias("id"))
+        )
         .distinct()
     )
-    sub_resolved = resolve_labels_via_ancestors(
-        sub_unlabeled, edges, object_languages, languages, object_labels,
-        out_col="2nd_native_label", max_steps=max_steps,
+    resolved = _barrier(
+        resolve_labels_via_ancestors(
+            unlabeled, edges, object_languages, languages, object_labels,
+            max_steps=max_steps,
+            closure_fn=lambda _edges, sd, max_steps: semi_join(
+                closure, sd.select(F.col("id").alias("seed")), "seed"
+            ),
+        )
     )
-    cities = _fill(cities, sub_resolved, "2nd_id", "2nd_native_label", update_key="seed")
-
-    # ---- subdivision_labels_by_country.sql (D7 keyed by 2nd_id) -----
-    # the reference takes the country of an ARBITRARY city of the
-    # subdivision (DISTINCT "2nd_id" over a multi-country set) — we take
-    # MIN(country) per 2nd_id [documented tiebreak]
-    sub_targets = (
-        cities.filter(F.col("2nd_native_label").isNull() & F.col("2nd_id").isNotNull() & F.col("country").isNotNull())
-        .groupBy("2nd_id")
-        .agg(F.min("country").alias("country"))
-        .select(F.col("2nd_id").alias("target_id"), F.col("2nd_id").alias("owner"), "country")
-    )
-    sub_by_country = labels_by_country(
-        sub_targets, countries, object_languages, languages, object_labels,
-        out_col="2nd_native_label",
-    )
+    cities = _fill(cities, resolved, "id", "native_label", update_key="seed")
     cities = _barrier(
-        _fill(cities, sub_by_country, "2nd_id", "2nd_native_label", update_key="target_id")
+        _fill(cities, _as_sub(resolved), "2nd_id", "2nd_native_label", update_key="seed")
     )
 
-    # ---- esperanto_subdivision_labels.sql ---------------------------
-    sub_eo = eo_label_pick(
-        cities.filter(F.col("2nd_id").isNotNull()).select(F.col("2nd_id").alias("id")).distinct(),
-        object_labels,
-        out_col="2nd_eo_label",
+    # ---- city_ + subdivision_labels_by_country.sql (D7, one pass) ---
+    # a D7 result depends only on (owner, country). The target key
+    # carries the role: a 2nd-level TE can also be a city of another
+    # country, and an untagged id would then match two result rows and
+    # duplicate spine rows. The reference takes the country of an
+    # ARBITRARY city of the subdivision (DISTINCT "2nd_id" over a
+    # multi-country set) — we take MIN(country) per 2nd_id [documented
+    # tiebreak].
+    def target(role: str, key: str) -> Column:
+        return F.struct(F.lit(role).alias("role"), F.col(key).alias("id")).alias("target_id")
+
+    targets = (
+        cities.filter(F.col("native_label").isNull() & F.col("country").isNotNull())
+        .select(target("city", "id"), F.col("id").alias("owner"), "country")
+        .unionByName(
+            cities.filter(
+                F.col("2nd_native_label").isNull()
+                & F.col("2nd_id").isNotNull()
+                & F.col("country").isNotNull()
+            )
+            .groupBy("2nd_id")
+            .agg(F.min("country").alias("country"))
+            .select(target("sub", "2nd_id"), F.col("2nd_id").alias("owner"), "country")
+        )
     )
-    cities = cities.join(
-        sub_eo.select(F.col("id").alias("2nd_id"), "2nd_eo_label"), "2nd_id", "left"
+    by_country = _barrier(
+        labels_by_country(targets, countries, object_languages, languages, object_labels)
+        .select(F.col("target_id.role").alias("role"), F.col("target_id.id").alias("key"), "native_label")
+    )
+
+    def for_role(role: str) -> DataFrame:
+        return by_country.filter(F.col("role") == role).drop("role")
+
+    cities = _fill(cities, for_role("city"), "id", "native_label", update_key="key")
+    cities = _barrier(
+        _fill(cities, _as_sub(for_role("sub")), "2nd_id", "2nd_native_label", update_key="key")
+    )
+
+    # ---- esperanto_city_ + _subdivision_labels.sql (D8, one pass) ---
+    eo = _barrier(
+        eo_label_pick(
+            cities.select("id")
+            .unionByName(cities.select(F.col("2nd_id").alias("id")).filter(F.col("id").isNotNull()))
+            .distinct(),
+            object_labels,
+        )
+    )
+    cities = cities.join(eo, "id", "left").join(
+        _as_sub(eo.withColumnRenamed("id", "2nd_id")), "2nd_id", "left"
     )
 
     # ---- subdivision_iso.sql (D9) -----------------------------------

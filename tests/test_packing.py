@@ -6,6 +6,7 @@ the plain anti-join, and split assignment must be a pure function of id.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -248,6 +249,20 @@ def test_assign_stable_ids_equals_global_window_and_avoids_single_partition(spar
     assert "SinglePartition" not in plan
     naive_plan = naive._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" in naive_plan  # the contrast the test pins
+
+
+def test_assign_stable_ids_rejects_drop_cols_outside_order_cols(spark):
+    """``drop_cols`` only exists to drop dead SORT keys: a column that is
+    not an order column is refused at the call, before any plan is
+    built; dropping an order column is accepted."""
+    from geo_db_spark.operators.ids import assign_stable_ids
+
+    docs = _docs(spark, n=20)
+    with pytest.raises(ValueError, match="text"):
+        assign_stable_ids(docs, ["source", "doc_id"], drop_cols=("source", "text"))
+    got = assign_stable_ids(docs, ["source", "doc_id"], drop_cols=("source",))
+    assert "source" not in got.columns
+    assert sorted(r.stable_id for r in got.collect()) == list(range(1, 21))
 
 
 def test_assign_stable_ids_permutation_at_scale(spark):
